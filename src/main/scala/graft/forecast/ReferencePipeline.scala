@@ -11,7 +11,13 @@ import graft.ml.ForecastModels.RegMetrics
   * testdata scale-factor directory: daily aggregation → 105-column feature
   * build (lags + rolling + diffs, null-filled) → cache barrier → time split →
   * feature pipeline + regressors → three-metric scorecards → KPI evaluation
-  * against the 6-day MA baseline (global, per-country, value-weighted).
+  * against the 6-day MA baseline (global and value-weighted).
+  *
+  * The input is read once, by the cache barrier. Everything after it runs
+  * over pinned frames: each scorecard is one summary pass over its pinned
+  * predictions, and the evaluation tail builds the baseline from the cached
+  * feature frame and computes every KPI in one aggregate job, then releases
+  * the pins.
   *
   * A user of the reference runs exactly this flow; `main` prints the same
   * scorecard shape the reference's README publishes.
@@ -87,18 +93,23 @@ object ReferencePipeline {
       case other => throw new IllegalArgumentException(s"unknown model: $other")
     }
 
-    // KPI for the first model (the reference uses its best LR for the KPI cut)
-    val evalDf = Forecast.evalAgainstBaseline(daily, fitted.head._1)
-    val kpi = Forecast.kpiGlobal(evalDf).head()
-    val vw = Forecast.valueWeighted(evalDf).head()
-    features.unpersist() // every consumer above has materialized
+    // KPI for the first model (the reference uses its best LR for the KPI
+    // cut). The MA(6) baseline reads the cached `features`, which hold every
+    // daily row with NetDailyQuantity untouched (the null fill covers only
+    // roll_/diff_ columns), so the input is not read again; the global and
+    // value-weighted KPIs share one aggregate job.
+    val evalDf = Forecast.evalAgainstBaseline(features, fitted.head._1)
+    val kpi = Forecast.kpiGlobalWithValueWeighted(evalDf).head()
+    // the KPI row was the last consumer of the prediction and feature pins
+    fitted.foreach(_._1.unpersist())
+    features.unpersist()
 
     Report(
       trainRows, testRows,
       fitted.map(_._2),
       kpi.getAs[Double]("mae_model"),
       kpi.getAs[Double]("mae_baseline"),
-      vw.getAs[Double]("pct_reduction"))
+      kpi.getAs[Double]("pct_reduction"))
   }
 
   def main(args: Array[String]): Unit = {

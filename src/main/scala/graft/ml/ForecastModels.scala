@@ -123,13 +123,15 @@ object ForecastModels {
       .setMaxDepth(3).setMaxBins(10000).setLossType("absolute")
       .setMaxIter(maxIter).setStepSize(stepSize).setSeed(42)
 
-  /** M7: mae/rmse/r2 on (label, prediction). */
+  /** M7: mae/rmse/r2 on (label, prediction), read from ONE summary pass —
+    * `RegressionEvaluator.evaluate` builds this same `RegressionMetrics`
+    * per call, so three single-metric evaluators would scan the predictions
+    * three times for identical numbers. */
   def evaluate(name: String, predictions: DataFrame): RegMetrics = {
-    def metric(m: String): Double =
-      new RegressionEvaluator()
-        .setLabelCol(LabelCol).setPredictionCol("prediction").setMetricName(m)
-        .evaluate(predictions)
-    RegMetrics(name, metric("mae"), metric("rmse"), metric("r2"))
+    val m = new RegressionEvaluator()
+      .setLabelCol(LabelCol).setPredictionCol("prediction")
+      .getMetrics(predictions)
+    RegMetrics(name, m.meanAbsoluteError, m.rootMeanSquaredError, m.r2)
   }
 
   /** M6+M8: fit the feature pipeline on train, fit the estimator, transform
@@ -141,8 +143,11 @@ object ForecastModels {
     * and the three-metric evaluation plus any downstream KPI re-reads the
     * predictions — without the pins each pass would replay the lag-feature
     * window lineage end to end (profiled at ~2× the whole query's cost).
-    * The training pin is dropped once the fit returns; the predictions pin
-    * is released by the ContextCleaner when the frame goes unreachable. */
+    * The training pin is dropped once the fit returns. The predictions pin
+    * belongs to the caller, who must `unpersist()` the returned frame once
+    * its last consumer has run ([[graft.forecast.ReferencePipeline]] does so
+    * after its KPI action); a frame left pinned stays registered until the
+    * ContextCleaner happens to collect it. */
   def trainAndEval(
       name: String,
       estimator: Estimator[_ <: Model[_]],

@@ -1,14 +1,17 @@
 package graft.forecast
 
 import graft.SparkSpec
+import graft.ml.ForecastModels
 
 /** E2E replay on sf0.001: the full reference flow must run and produce a
   * coherent scorecard (finite metrics, sensible split, KPI columns). */
 class ReferencePipelineSpec extends SparkSpec {
 
+  private val Sf0001 = "/root/testdata/sf0.001"
+
   test("referenceCompat frame carries the reference's full feature width") {
     val daily = Forecast.dailySalesCompat(
-      graft.Tables.salesLines(spark, "/root/testdata/sf0.001"))
+      graft.Tables.salesLines(spark, Sf0001))
     val frame = ReferencePipeline.featureFrameCompat(daily)
     val lagCols = frame.columns.filter(_.startsWith("lag_"))
     val rollCols = frame.columns.filter(_.startsWith("roll_"))
@@ -37,7 +40,7 @@ class ReferencePipelineSpec extends SparkSpec {
 
   test("referenceCompat pipeline runs end-to-end and still beats nothing-burger metrics") {
     val r = ReferencePipeline.run(
-      spark, "/root/testdata/sf0.001", cutoff = "1999-09-01", models = Seq("lr"),
+      spark, Sf0001, cutoff = "1999-09-01", models = Seq("lr"),
       referenceCompat = true)
     assert(r.trainRows > 0 && r.testRows > 0)
     val lr = r.scorecards.head
@@ -47,7 +50,7 @@ class ReferencePipelineSpec extends SparkSpec {
 
   test("full pipeline replays end-to-end on sf0.001 with LR") {
     val r = ReferencePipeline.run(
-      spark, "/root/testdata/sf0.001", cutoff = "1999-09-01", models = Seq("lr"))
+      spark, Sf0001, cutoff = "1999-09-01", models = Seq("lr"))
     assert(r.trainRows > 0 && r.testRows > 0)
     // ~64/36 style time split (reference proportions are cutoff-dependent;
     // just require both sides substantial)
@@ -69,5 +72,39 @@ class ReferencePipelineSpec extends SparkSpec {
       s"LR MAE ${r.maeModel} must beat baseline MAE ${r.maeBaseline} (published: 1.50 vs 18.18)")
     assert(r.valueWeightedReductionPct > 0,
       s"value-weighted reduction ${r.valueWeightedReductionPct}% must be positive (published: 83.49%)")
+  }
+
+  for (compat <- Seq(false, true))
+    test(s"fused KPI over cached features equals kpiGlobal + valueWeighted over daily (referenceCompat=$compat)") {
+      val sales = graft.Tables.salesLines(spark, Sf0001)
+      val daily = if (compat) Forecast.dailySalesCompat(sales) else Forecast.dailySales(sales)
+      val features = (if (compat) ReferencePipeline.featureFrameCompat(daily)
+        else ReferencePipeline.featureFrame(daily)).cache()
+      val (train, test) = ForecastModels.timeSplit(features, "1999-09-01")
+      val fp = ForecastModels.featurePipeline(ForecastModels.numericFeatureCols(features)).fit(train)
+      val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), fp, train, test)
+      def values(df: org.apache.spark.sql.DataFrame): Map[String, Any] = {
+        val r = df.head()
+        r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+      }
+      val fused = values(Forecast.kpiGlobalWithValueWeighted(Forecast.evalAgainstBaseline(features, pred)))
+      val split = Forecast.evalAgainstBaseline(daily, pred)
+      val kpi = values(Forecast.kpiGlobal(split))
+      val vw = values(Forecast.valueWeighted(split))
+      assert(fused.keySet === kpi.keySet ++ vw.keySet)
+      assert(fused === kpi ++ vw)
+      pred.unpersist()
+      features.unpersist()
+    }
+
+  test("a pipeline run leaves no persisted RDD behind") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    ReferencePipeline.run(
+      spark, Sf0001, cutoff = "1999-09-01", models = Seq("lr"))
+    val after = sc.getPersistentRDDs.keySet
+    // compared by id, not by count: the ContextCleaner may release another
+    // suite's unreachable pins while the run is in flight
+    assert((after -- before).isEmpty, s"leaked persisted RDDs: ${after -- before}")
   }
 }

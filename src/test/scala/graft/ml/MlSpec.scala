@@ -59,6 +59,18 @@ class MlSpec extends SparkSpec {
     assert(a.toSeq === b.toSeq)
   }
 
+  test("single-pass evaluate returns exactly the three single-metric evaluators' values") {
+    val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
+    val pred = ForecastModels.fitPredict(ForecastModels.lasso(0.05), features, frame, frame)
+    def metric(m: String): Double =
+      new org.apache.spark.ml.evaluation.RegressionEvaluator()
+        .setLabelCol(ForecastModels.LabelCol).setPredictionCol("prediction").setMetricName(m)
+        .evaluate(pred)
+    val expected = ForecastModels.RegMetrics("lr", metric("mae"), metric("rmse"), metric("r2"))
+    assert(ForecastModels.evaluate("lr", pred) === expected)
+    pred.unpersist()
+  }
+
   test("lasso recovers a noiseless linear relation and evaluates near-perfect") {
     val features = ForecastModels.featurePipeline(Seq("lag_qty_1_day")).fit(frame)
     val (pred, metrics) = ForecastModels.trainAndEval(
